@@ -17,7 +17,16 @@ object Pipeline {
     * FAILFAST semantics — the reference's `res.typed(...)` throws on schema
     * mismatch (task.ts:131-134). Returns one row per aircraft, with an
     * explicit `seq` column capturing array position (= arrival order, the
-    * order D1's last-wins is defined over). */
+    * order D1's last-wins is defined over).
+    *
+    * The explode is `posexplode_outer` + a `pos IS NOT NULL` filter, not a
+    * plain `posexplode`: for an inner generator Catalyst infers
+    * `isnotnull(env.ac) AND size(env.ac) > 0` and pushes it below the
+    * projection, where `env` inlines to its `from_json` — so every
+    * envelope would be parsed three times, once per filter predicate and
+    * once for the rows. The outer form infers nothing; dropping its
+    * null-`pos` row (null or empty `ac`) keeps the rows identical and the
+    * optimized plan at one `JsonToStructs`. */
   def fromEnvelopeJson(spark: SparkSession, jsonLines: DataFrame): DataFrame = {
     val withBase =
       if (jsonLines.columns.contains("arrival_idx")) jsonLines
@@ -31,7 +40,8 @@ object Pipeline {
     // recency model); inputs without it (plain text scans) order only
     // within each envelope. 2^32 >> any envelope's ac[] length.
     parsed
-      .select(col("arrival_idx"), posexplode(col("env.ac")).as(Seq("pos", "ac")))
+      .select(col("arrival_idx"), posexplode_outer(col("env.ac")).as(Seq("pos", "ac")))
+      .filter(col("pos").isNotNull)
       .select(
         (col("arrival_idx") * (1L << 32) + col("pos")).cast("long").as("seq"),
         col("ac.*"))

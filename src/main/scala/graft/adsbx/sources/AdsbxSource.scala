@@ -61,11 +61,14 @@ object AdsbxSource {
     val lines = envelopes.toDF("value")
     val parsed = lines.withColumn("env",
       from_json(col("value"), Schemas.envelope, Map("mode" -> "PERMISSIVE")))
-    // from_json PERMISSIVE null-fills on mismatch: a null/ac-less env is bad
-    val bad = parsed.filter(col("env").isNull || col("env.ac").isNull)
-      .select(col("value"))
-    val good = parsed.filter(col("env").isNotNull && col("env.ac").isNotNull)
-      .select(posexplode(col("env.ac")).as(Seq("seq", "ac")))
+    // from_json PERMISSIVE null-fills on mismatch: a null/ac-less env is bad.
+    // Each side references the parse once (`env.ac` is null whenever `env`
+    // is), and the good side explodes the way fromEnvelopeJson does, so
+    // neither optimized plan evaluates from_json twice per line.
+    val bad = parsed.filter(col("env.ac").isNull).select(col("value"))
+    val good = parsed
+      .select(posexplode_outer(col("env.ac")).as(Seq("seq", "ac")))
+      .filter(col("seq").isNotNull)
       .select(col("seq").cast("long").as("seq"), col("ac.*"))
     (good, bad)
   }

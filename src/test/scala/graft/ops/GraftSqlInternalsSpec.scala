@@ -6,18 +6,19 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Pins the ONE private Spark API this library shims:
-  * `SparkSession.internalCreateDataFrame`, exposed through
-  * `org.apache.spark.sql.classic.GraftSqlInternals` and load-bearing for
-  * the whole rank substrate (`Relational2.globalRank` / `groupedRank`,
-  * which the percentile/winsorize/curriculum families ride).
+/** Pins the private Spark APIs this library shims through
+  * `org.apache.spark.sql.classic.GraftSqlInternals`:
+  * `SparkSession.internalCreateDataFrame`, load-bearing for the whole rank
+  * substrate (`Relational2.globalRank` / `groupedRank`, which the
+  * percentile/winsorize/curriculum families ride), and `Dataset.ofRows`,
+  * which `AdsbxStream` runs its once-analyzed pipeline through.
   *
   * Private APIs can drift on a Spark minor bump in two ways this suite
   * turns from a confusing runtime error into an actionable failure:
   *   - the `classic.SparkSession` concrete class moves/renames → the
   *     shim's downcast throws ClassCastException;
-  *   - `internalCreateDataFrame`'s signature changes → LinkageError at
-  *     the shim's call site.
+  *   - `internalCreateDataFrame`'s or `ofRows`' signature changes →
+  *     LinkageError at the shim's call site.
   * Either way the fix is the same: update GraftSqlInternals.scala (and
   * only it — callers go through the one seam). */
 class GraftSqlInternalsSpec extends SparkSpec {
@@ -50,5 +51,23 @@ class GraftSqlInternalsSpec extends SparkSpec {
     val got = df.orderBy("id").collect().map(r =>
       (r.getLong(0), Option(r.getString(1)).orNull))
     assert(got.toSeq === Seq((1L, "a"), (2L, "b"), (3L, null)))
+  }
+
+  test("ofRows shim turns a logical plan into a DataFrame on this Spark binary") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val id = AttributeReference("id", LongType, nullable = false)()
+    val plan = LocalRelation(Seq(id), Seq(InternalRow(7L), InternalRow(8L)))
+    val df =
+      try org.apache.spark.sql.classic.GraftSqlInternals.ofRows(spark, plan)
+      catch {
+        case e @ (_: LinkageError | _: ClassCastException) =>
+          fail(s"$shim no longer binds to this Spark binary " +
+            s"(${org.apache.spark.SPARK_VERSION}): ${e.getClass.getSimpleName}" +
+            s" ${e.getMessage}. Dataset.ofRows is private[sql] — update the " +
+            "shim; AdsbxStream's per-batch rebind goes through it.", e)
+      }
+    assert(df.schema === StructType(Seq(StructField("id", LongType, nullable = false))))
+    assert(df.collect().map(_.getLong(0)).toSeq === Seq(7L, 8L))
   }
 }

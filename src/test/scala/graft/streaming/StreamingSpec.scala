@@ -3,6 +3,7 @@ package graft.streaming
 import graft.SparkSpec
 import graft.adsbx.{AdsbxConfig, Fixtures, Pipeline}
 import graft.adsbx.sources.AdsbxSource
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -57,6 +58,67 @@ class StreamingSpec extends SparkSpec {
     assert(b2.toSeq == Seq(("n1", 110.0 * 0.514444)))
     assert(all.size == 3)
   }
+
+  // AdsbxStream analyzes Pipeline.features once per query and rebinds it
+  // to each micro-batch: every batch must still match a fresh batch
+  // pipeline over its envelopes, stamp its own time/start, and fail fast.
+  for (filtering <- Seq(true, false))
+    test(s"E1: once-analyzed stream pipeline ≡ Pipeline.features per batch (includes filtering $filtering)") {
+      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+      import spark.implicits._
+      val cfg = AdsbxConfig(includesFiltering = filtering, emergencyHostile = true)
+      val pages = Fixtures.pollPages
+      // the second snapshot of batch 1 re-reports N777XY (page 1's
+      // winner): D1 must pick it across the two snapshots of one batch
+      val moved = pages(1)(1).copy(gs = Some(55.0), lat = 43.0)
+      val batches = Seq(
+        Seq(Fixtures.envelopeJson(pages(0)) -> 0L),
+        Seq(Fixtures.envelopeJson(pages(1)) -> 1L,
+          Fixtures.envelopeJson(pages(2) :+ moved) -> 2L,
+          """{"msg":"ok","ac":[]}""" -> 3L),
+        Seq(Fixtures.envelopeJson(Fixtures.aircraft) -> 4L))
+      // the feature minus its processing-time stamps, as comparable JSON
+      def stable(f: DataFrame): DataFrame = f.select(
+        to_json(col("feature").withField("properties",
+          col("feature.properties").dropFields("time", "start"))).as("f"),
+        col("feature.properties.time").as("time"),
+        col("feature.properties.start").as("start"))
+
+      val input = MemoryStream[(String, Long)]
+      val got = mutable.Map[Long, Array[(String, Timestamp, Timestamp)]]()
+      val q = AdsbxStream.run(input.toDF().toDF("value", "arrival_idx"),
+        Fixtures.includesDf(spark), cfg,
+        (df, id) => {
+          val rows = stable(df).collect()
+            .map(r => (r.getString(0), r.getTimestamp(1), r.getTimestamp(2)))
+          got.synchronized { got(id) = rows }
+        },
+        trigger = Trigger.ProcessingTime(0))
+      try {
+        batches.foreach { b => input.addData(b); q.processAllAvailable() }
+        input.addData("""{"msg":"ok","ac":"not-an-array"}""" -> 5L)
+        intercept[Exception] { q.processAllAvailable() }
+      } finally q.stop()
+
+      val perBatch = got.toSeq.sortBy(_._1).map(_._2)
+      assert(perBatch.size == batches.size)
+      batches.zip(perBatch).foreach { case (envs, rows) =>
+        val expected = stable(Pipeline.features(
+          Pipeline.fromEnvelopeJson(spark, envs.toDF("value", "arrival_idx")),
+          Fixtures.includesDf(spark), cfg))
+          .collect().map(_.getString(0)).sorted.toSeq
+        assert(expected.nonEmpty)
+        assert(rows.map(_._1).sorted.toSeq == expected)
+      }
+      // one stamp per batch, shared by time and start, later each batch
+      val stamps = perBatch.map { rows =>
+        assert(rows.forall(r => r._2 == r._3))
+        val ts = rows.map(_._2).distinct
+        assert(ts.length == 1)
+        ts.head
+      }
+      stamps.sliding(2).foreach { case Seq(a, b) => assert(a.before(b)) }
+    }
 
   test("V1: FAILFAST streaming parse rejects malformed envelopes") {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
